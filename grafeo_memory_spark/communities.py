@@ -22,7 +22,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from grafeo_memory_spark.store import COMMUNITY_SCHEMA, EDGE_SCHEMA, Store
+from grafeo_memory_spark.store import (
+    COMMUNITY_SCHEMA,
+    EDGE_SCHEMA,
+    Store,
+    local_frame,
+)
 
 #: policy: (member_names, relation_texts) -> (name, summary)
 Summarizer = Callable[[list[str], list[str]], tuple[str, str]]
@@ -65,8 +70,8 @@ def _collect_changed_members(
     if not changed_cids:
         return {}
     spark = memb.sparkSession
-    cids_df = spark.createDataFrame(
-        [(int(c),) for c in changed_cids], "community int"
+    cids_df = local_frame(
+        spark, [(int(c),) for c in changed_cids], "community int"
     )
     clusters: dict[int, list[tuple[int, str]]] = {}
     for r in memb.join(F.broadcast(cids_df), "community", "left_semi").collect():
@@ -138,7 +143,7 @@ def materialize_communities(
     member_ids = [eid for ms in clusters.values() for eid, _ in ms]
     rel_by_src: dict[int, list[str]] = {}
     if member_ids:
-        ids_df = spark.createDataFrame([(i,) for i in member_ids], "src long")
+        ids_df = local_frame(spark, [(i,) for i in member_ids], "src long")
         names = store.entities.select("id", "name")
         rel = (
             store.edges.where(F.col("edge_type") == "RELATION")
@@ -198,9 +203,7 @@ def materialize_communities(
 
     # rewrite: drop every community row of this user that is not an
     # unchanged keeper (covers updated AND dissolved), union fresh rows
-    keep = spark.createDataFrame(
-        [(i,) for i in keep_node_ids] or [(None,)], "id long"
-    )
+    keep = local_frame(spark, [(i,) for i in keep_node_ids], "id long")
     communities = store.communities.where(
         (F.col("user_id") != user_id) | F.col("user_id").isNull()
     ).unionByName(
@@ -208,7 +211,7 @@ def materialize_communities(
     )
     if new_rows:
         communities = communities.unionByName(
-            spark.createDataFrame(new_rows, COMMUNITY_SCHEMA)
+            local_frame(spark, new_rows, COMMUNITY_SCHEMA)
         )
 
     # HAS_MEMBER edges: keep only those of keeper nodes, add fresh ones
@@ -220,7 +223,7 @@ def materialize_communities(
         kept_hm
     )
     if edge_rows:
-        edges = edges.unionByName(spark.createDataFrame(edge_rows, EDGE_SCHEMA))
+        edges = edges.unionByName(local_frame(spark, edge_rows, EDGE_SCHEMA))
 
     out = store.with_(communities=communities, edges=edges)
     return out, infos, next_node_id, next_edge_id
@@ -351,7 +354,8 @@ def connected_components(
                 comp_min[r] = node
         out = [(node, comp_min[find(node)]) for node in parent]
         id_type = edges_sym.schema[0].dataType
-        return edges_sym.sparkSession.createDataFrame(
+        return local_frame(
+            edges_sym.sparkSession,
             out,
             T.StructType(
                 [

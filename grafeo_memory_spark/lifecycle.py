@@ -4,9 +4,12 @@ DataFrame transformations over a :class:`~grafeo_memory_spark.store.Store`.
 
 Design (SURVEY §2.12 T3): nothing is mutated in place. "Expiring" a
 memory rewrites the memories DataFrame through a broadcast join with a
-tiny updates table; new versions are unioned on. The history DataFrame
-*is* the change log (`history.py:39-139` legacy mode — in Spark the
-event-log design gives engine-CDC and legacy semantics at once). At real
+tiny updates table; new versions are unioned on. Driver-built rows (new
+versions, history, edges, the updates table) enter plans as JVM local
+relations (``store.local_frame``), so no later action over the store
+runs Python workers over them. The history DataFrame *is* the change
+log (`history.py:39-139` legacy mode — in Spark the event-log design
+gives engine-CDC and legacy semantics at once). At real
 scale the same operations map 1:1 onto MERGE INTO on a lakehouse table
 format; the logical plan here is the portable part.
 
@@ -34,6 +37,7 @@ from grafeo_memory_spark.store import (
     HISTORY_SCHEMA,
     MEMORY_SCHEMA,
     Store,
+    local_frame,
 )
 
 ADD, UPDATE, DELETE, NONE = "ADD", "UPDATE", "DELETE", "NONE"
@@ -240,7 +244,8 @@ def execute_decisions(
         last_per_id: dict[int, int | None] = {}
         for i, inv in expire:
             last_per_id[i] = inv
-        upd = spark.createDataFrame(
+        upd = local_frame(
+            spark,
             [(i, now_ms, inv) for i, inv in last_per_id.items()],
             "id long, _new_expired long, _new_invalid long",
         )
@@ -254,7 +259,7 @@ def execute_decisions(
     if inherit:
         # copy old HAS_ENTITY edges onto the new node (reference
         # `_inherit_entity_edges`, manager.py:1153-1180)
-        pairs = spark.createDataFrame(inherit, "new_id long, src long")
+        pairs = local_frame(spark, inherit, "new_id long, src long")
         inherited = (
             store.edges.where(F.col("edge_type") == "HAS_ENTITY")
             .join(F.broadcast(pairs), "src")
@@ -286,7 +291,7 @@ def execute_decisions(
         for b in sorted(counts):
             offs.append((b, acc))
             acc += counts[b]
-        off_df = spark.createDataFrame(offs or [(0, 0)], "_b int, _off long")
+        off_df = local_frame(spark, offs, "_b int, _off long")
         inherited = (
             bucketed.join(F.broadcast(off_df), "_b")
             .withColumn(
@@ -305,14 +310,14 @@ def execute_decisions(
 
     if new_rows:
         memories = memories.unionByName(
-            spark.createDataFrame(new_rows, MEMORY_SCHEMA)
+            local_frame(spark, new_rows, MEMORY_SCHEMA)
         )
     if edge_rows:
-        edges = edges.unionByName(spark.createDataFrame(edge_rows, EDGE_SCHEMA))
+        edges = edges.unionByName(local_frame(spark, edge_rows, EDGE_SCHEMA))
     history = store.history
     if history_rows:
         history = history.unionByName(
-            spark.createDataFrame(history_rows, HISTORY_SCHEMA)
+            local_frame(spark, history_rows, HISTORY_SCHEMA)
         )
 
     return (
@@ -327,7 +332,7 @@ def hard_delete(store: Store, memory_ids: Sequence[int]) -> Store:
     """S8 — public `delete()` (reference `manager.py:2192-2198`):
     anti-join rewrite of memories + dangling-edge cleanup."""
     spark = store.memories.sparkSession
-    ids = spark.createDataFrame([(int(i),) for i in memory_ids], "id long")
+    ids = local_frame(spark, [(int(i),) for i in memory_ids], "id long")
     memories = store.memories.join(F.broadcast(ids), "id", "left_anti")
     edges = (
         store.edges.join(
@@ -345,7 +350,7 @@ def get_existing_relations(store: Store, entity_ids: Sequence[int]) -> DataFrame
     `_get_existing_relations`, `manager.py:1712-1751`): the input the
     relation-reconciliation policy sees."""
     spark = store.edges.sparkSession
-    ids = spark.createDataFrame([(int(i),) for i in entity_ids], "src long")
+    ids = local_frame(spark, [(int(i),) for i in entity_ids], "src long")
     names = store.entities.select("id", "name")
     return (
         store.edges.where(F.col("edge_type") == "RELATION")
@@ -371,7 +376,8 @@ def delete_relations(store: Store, triples: Sequence[dict]) -> Store:
     if not triples:
         return store
     spark = store.edges.sparkSession
-    tdf = spark.createDataFrame(
+    tdf = local_frame(
+        spark,
         [
             (t.get("source"), t.get("target"), t.get("relation_type"))
             for t in triples
@@ -498,14 +504,14 @@ def consolidate(
     # provenance of each summary.
     out = store.with_(
         memories=store.memories.unionByName(
-            spark.createDataFrame(new_rows, MEMORY_SCHEMA)
+            local_frame(spark, new_rows, MEMORY_SCHEMA)
         ),
         history=store.history.unionByName(
-            spark.createDataFrame(hist_rows, HISTORY_SCHEMA)
+            local_frame(spark, hist_rows, HISTORY_SCHEMA)
         ),
     )
     out = hard_delete(out, victims)
     out = out.with_(
-        edges=out.edges.unionByName(spark.createDataFrame(edge_rows, EDGE_SCHEMA))
+        edges=out.edges.unionByName(local_frame(spark, edge_rows, EDGE_SCHEMA))
     )
     return out, summary_ids, next_node_id, next_edge_id

@@ -66,6 +66,7 @@ from grafeo_memory_spark.store import (
     Store,
     empty_store,
     load_store,
+    local_frame,
 )
 
 
@@ -409,7 +410,8 @@ class MemoryEngine:
                 scope_filter(user_id=user_id, graph_name=graph_name)
             )
             if live.take(1) and infer:
-                probes = self.spark.createDataFrame(
+                probes = local_frame(
+                    self.spark,
                     [(i, v) for i, v in enumerate(vecs)],
                     "probe_id long, qv array<float>",
                 )
@@ -621,13 +623,13 @@ class MemoryEngine:
         if ent_rows:
             st = st.with_(
                 entities=st.entities.unionByName(
-                    self.spark.createDataFrame(ent_rows, ENTITY_SCHEMA)
+                    local_frame(self.spark, ent_rows, ENTITY_SCHEMA)
                 )
             )
         if edge_rows:
             st = st.with_(
                 edges=st.edges.unionByName(
-                    self.spark.createDataFrame(edge_rows, EDGE_SCHEMA)
+                    local_frame(self.spark, edge_rows, EDGE_SCHEMA)
                 )
             )
         self.store = st
@@ -673,7 +675,7 @@ class MemoryEngine:
         if edge_rows:
             self.store = self.store.with_(
                 edges=self.store.edges.unionByName(
-                    self.spark.createDataFrame(edge_rows, EDGE_SCHEMA)
+                    local_frame(self.spark, edge_rows, EDGE_SCHEMA)
                 )
             )
 
@@ -686,7 +688,8 @@ class MemoryEngine:
         memories it yielded, MENTIONS edges to the extracted entities."""
         eid = self._next_node_id
         self._next_node_id += 1
-        ep = self.spark.createDataFrame(
+        ep = local_frame(
+            self.spark,
             [
                 dict(id=eid, content=content, source="message",
                      user_id=user_id, session_id=session_id, run_id=run_id,
@@ -734,7 +737,7 @@ class MemoryEngine:
         if edge_rows:
             st = st.with_(
                 edges=st.edges.unionByName(
-                    self.spark.createDataFrame(edge_rows, EDGE_SCHEMA)
+                    local_frame(self.spark, edge_rows, EDGE_SCHEMA)
                 )
             )
         self.store = st
@@ -810,7 +813,7 @@ class MemoryEngine:
             self._last_stages.insert(self._last_stages.index("final"), "rerank")
             if not reranked:
                 return df.limit(0)
-            df = self.spark.createDataFrame(reranked, df.schema)
+            df = local_frame(self.spark, reranked, df.schema)
         if update_access_stats:
             # reference semantics (`scoring.py:115-121`): serving a
             # result counts as an access. Materialize the ≤k rows once,
@@ -819,7 +822,7 @@ class MemoryEngine:
             # now-mutated store.
             rows = df.collect()
             self.record_access([r["memory_id"] for r in rows])
-            df = self.spark.createDataFrame(rows, df.schema)
+            df = local_frame(self.spark, rows, df.schema)
         return df
 
     def _mmr_diversify(self, df: DataFrame, query_vec, k: int) -> DataFrame:
@@ -828,7 +831,9 @@ class MemoryEngine:
         candidates. The distributed part already reduced the store to
         this pool; the selection loop is inherently sequential driver
         work over ~40 rows, the same split the reference engine uses.
-        The returned score is the MMR score, in selection order."""
+        The returned score is the MMR score, in selection order; the
+        selected rows re-enter the plan as a local relation
+        (``store.local_frame``)."""
         from grafeo_memory_spark.functions.vector import mmr_select
 
         rows = [r.asDict() for r in df.collect()]
@@ -866,7 +871,7 @@ class MemoryEngine:
         self._last_stages.insert(
             self._last_stages.index("final"), "mmr_diversify"
         )
-        return self.spark.createDataFrame(out, df.schema)
+        return local_frame(self.spark, out, df.schema)
 
     @_locked
     def record_access(
@@ -976,7 +981,8 @@ class MemoryEngine:
             .withColumn("updated_at", F.when(hit, F.lit(now)).otherwise(F.col("updated_at")))
             .withColumn("embedding", F.when(hit, vec).otherwise(F.col("embedding"))),
             history=self.store.history.unionByName(
-                self.spark.createDataFrame(
+                local_frame(
+                    self.spark,
                     [dict(memory_id=mid, event="UPDATE", old_text=old_text,
                           new_text=text, timestamp=now, actor_id=None,
                           role=None)],
@@ -1190,7 +1196,7 @@ class MemoryEngine:
         """
         from grafeo_memory_spark.operators.traversals import expand_chain
 
-        seed = self.spark.createDataFrame([(int(memory_id),)], "node_id long")
+        seed = local_frame(self.spark, [(int(memory_id),)], "node_id long")
         parts = []
         if direction in ("forward", "both"):
             parts.append(
@@ -1233,7 +1239,7 @@ class MemoryEngine:
         """
         from grafeo_memory_spark.operators.traversals import expand_chain
 
-        seed = self.spark.createDataFrame([(int(episode_id),)], "node_id long")
+        seed = local_frame(self.spark, [(int(episode_id),)], "node_id long")
         parts = []
         if direction in ("backward", "both"):
             parts.append(

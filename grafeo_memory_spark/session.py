@@ -4,6 +4,8 @@ Defaults are tuned for the test harness (local[N], single JVM) but every
 setting is the one you'd want on a real cluster too: AQE on (runtime
 re-planning, skew-join splitting, partition coalescing), UTC session time
 zone (oracle comparability), Arrow enabled for the Pandas-UDF slow path.
+Arrow also carries the driver-built frames (``store.local_frame``) into
+the JVM as local relations.
 """
 
 from __future__ import annotations
@@ -36,20 +38,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # sort-merge stays the static default (r13, reverting the r12
-        # global preferSortMergeJoin=false flip): the r13 interleaved
-        # 32-core A/B on the five join-heavy rows the driver flagged
-        # (lpa/cc/betweenness/pagerank_distributed + graph_metrics)
-        # read a tie — smj=true mins 4.50/2.54/8.37/4.71/2.06 vs
-        # false 4.71/2.58/9.04/4.63/2.02 — so the flip fails the
-        # "false must win" bar, and planner-chosen SHJ over
-        # checkpointed stat-less loop frames is exactly where its
-        # "build side fits" precondition cannot be checked (guide
-        # §3.1). Env-overridable for re-measurement.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
+        # preferSortMergeJoin stays at Spark's true (r13 A/B: false tied)
         # The runtime-safe SHJ alternative — AQE's
         # maxShuffledHashJoinLocalMapThreshold SMJ→SHJ conversion from
         # measured partition sizes — was A/B'd r13 (interleaved, 14

@@ -20,10 +20,13 @@ from __future__ import annotations
 import os
 import shutil
 from dataclasses import dataclass, replace
+from typing import Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 EMBEDDING_DIMS = 16  # fixture/test dimensionality; configurable per store
 
@@ -122,6 +125,29 @@ HISTORY_SCHEMA = T.StructType(
     ]
 )
 
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: T.StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-built rows, planned as a JVM local
+    relation (``LocalTableScan``). ``spark.createDataFrame(<list>)``
+    plans a Python RDD instead (``Scan ExistingRDD``), and the
+    append-only Store unions such frames into its tables, so every
+    later action would re-run Python workers over every appended row.
+
+    ``rows`` are dicts (extra keys ignored, missing keys NULL) or
+    tuples in schema order; ``schema`` is a StructType or DDL string.
+    A NULL in a non-nullable field or a value of the wrong type raises.
+    """
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    records = [
+        r if isinstance(r, dict) else dict(zip(schema.names, r)) for r in rows
+    ]
+    table = pa.Table.from_pylist(records, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
 TABLE_SCHEMAS = {
     "memories": MEMORY_SCHEMA,
     "entities": ENTITY_SCHEMA,
@@ -155,9 +181,7 @@ class Store:
             object.__setattr__(
                 self,
                 "communities",
-                self.memories.sparkSession.createDataFrame(
-                    [], COMMUNITY_SCHEMA
-                ),
+                local_frame(self.memories.sparkSession, [], COMMUNITY_SCHEMA),
             )
 
     def with_(self, **tables: DataFrame) -> "Store":
@@ -167,7 +191,7 @@ class Store:
 def empty_store(spark: SparkSession) -> Store:
     return Store(
         **{
-            name: spark.createDataFrame([], schema)
+            name: local_frame(spark, [], schema)
             for name, schema in TABLE_SCHEMAS.items()
         }
     )
@@ -204,7 +228,7 @@ def load_store(spark: SparkSession, path: str) -> Store:
             tables[name] = _reconcile(spark.read.parquet(p), schema)
         else:
             # stores saved before the communities table existed
-            tables[name] = spark.createDataFrame([], schema)
+            tables[name] = local_frame(spark, [], schema)
     return Store(**tables)
 
 

@@ -34,6 +34,7 @@ SMOKE_FILES = {
     "test_citations.py",
     "test_decontamination.py",
     "test_lm.py",
+    "test_local_frames.py",
     "test_new_driver_rows.py",
     "test_plan_shapes.py",
     "test_schemas.py",
